@@ -83,16 +83,6 @@ def exact_duplicates(docs: DataFrame, id_col: str = "doc_id",
             .select(F.col("fp").alias("fingerprint"), "keep_id", "dup_id"))
 
 
-def doc_shingles(docs: DataFrame, id_col: str = "doc_id",
-                 text_col: str = "text", n: int = 3) -> DataFrame:
-    """(id, shingle) exploded pairs, distinct per doc."""
-    docs = ensure_parallelism(docs)
-    return (docs.select(F.col(id_col).alias("doc_id"),
-                        shingles(ws_tokens(F.lower(F.col(text_col))), n)
-                        .alias("sh"))
-            .select("doc_id", F.explode("sh").alias("shingle")))
-
-
 def _shingle_sets(docs: DataFrame, id_col: str, text_col: str,
                   n: int) -> DataFrame:
     """(doc_id, sh: array<string>, sz: int) — one row per doc, shingle

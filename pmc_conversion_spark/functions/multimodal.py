@@ -25,19 +25,26 @@ NotImplementedError unless ``fake=True``, which produces a
 deterministic fake decode so tests and the driver can exercise the
 full pipeline shape).
 
-Design for scale: media bytes ride as a ``binary`` column; decode /
-resize / frame-sample run as Arrow-batched ``mapInPandas`` (one Python
-worker per partition, zero-copy batches); metadata-only transforms never
-touch the bytes (column pruning drops the blob at the scan).
+Design for scale: media bytes ride as a ``binary`` column; metadata-only
+transforms never touch the bytes (column pruning drops the blob at the
+scan). Every per-row encode / decode / feature stage runs through
+``util.map_rows`` — the one per-row Arrow path: ``ensure_parallelism``
+then ``mapInPandas`` (one Python worker per partition, Arrow batches),
+with a plain per-row function that yields output tuples. A codec is
+then just its bytes↔array function: ``_synth`` wraps encoders and
+``decode_pixels_batch`` wraps pixel decoders with the shared
+``pixel_stats`` geometry proof.
 """
 
 from __future__ import annotations
 
-from collections.abc import Iterator
+import hashlib
 
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
+
+from pmc_conversion_spark.util import map_rows
 
 #: schema of a media row: opaque bytes + typed metadata
 MEDIA_SCHEMA = T.StructType([
@@ -52,6 +59,9 @@ DECODE_OUT_SCHEMA = (
     "media_id long, kind string, n_bytes long, width int, height int, "
     "n_channels int, checksum string"
 )
+
+#: output of every synthetic-media encoder
+CONTENT_SCHEMA = "media_id long, content binary"
 
 
 def attach_media_metadata(df: DataFrame, content_col: str = "content"
@@ -86,31 +96,15 @@ def decode_media_batch(df: DataFrame, *, fake: bool = False) -> DataFrame:
     sees pandas batches (zero-copy via Arrow); per-row Python work is
     just the decoder call — batching amortizes everything else.
     """
-    import pandas as pd
 
-    def _decode(batches: Iterator["pd.DataFrame"]) -> Iterator["pd.DataFrame"]:
-        for pdf in batches:
-            metas = [decode_image_meta(c if c is not None else b"", fake=fake)
-                     for c in pdf["content"]]
-            out = pd.DataFrame({
-                "media_id": pdf["media_id"],
-                "kind": pdf["kind"],
-                "n_bytes": [len(c) if c is not None else 0
-                            for c in pdf["content"]],
-                "width": [m["width"] for m in metas],
-                "height": [m["height"] for m in metas],
-                "n_channels": [m["n_channels"] for m in metas],
-                "checksum": [__import__("hashlib").sha1(
-                    c if c is not None else b"").hexdigest()
-                    for c in pdf["content"]],
-            })
-            yield out
+    def _decode(m, kind, c):
+        c = c if c is not None else b""
+        meta = decode_image_meta(c, fake=fake)
+        yield (m, kind, len(c), meta["width"], meta["height"],
+               meta["n_channels"], hashlib.sha1(c).hexdigest())
 
-    # a single-file source arrives as 1 partition; spread the decode
-    # across the cluster (cheap relative to per-row decode work)
-    from pmc_conversion_spark.util import ensure_parallelism
-    df = ensure_parallelism(df)
-    return df.mapInPandas(_decode, DECODE_OUT_SCHEMA)
+    return map_rows(df, _decode, DECODE_OUT_SCHEMA,
+                    ("media_id", "kind", "content"))
 
 
 def frame_sample_plan(df: DataFrame, every_n: int = 10) -> DataFrame:
@@ -246,22 +240,40 @@ def synth_pixels(media_id: int, w: int, h: int):
     return ((media_id * 31 + r * 7 + c * 3 + ch) % 256).astype(np.uint8)
 
 
+def _synth(df: DataFrame, make, cols=("media_id",)) -> DataFrame:
+    """(media_id, *params) → (media_id, content): one real media file
+    per row, ``make(media_id, *params)`` on the int-cast row values."""
+    return map_rows(
+        df, lambda m, *a: [(int(m), make(int(m), *map(int, a)))],
+        CONTENT_SCHEMA, cols)
+
+
+def pixel_stats(m, px) -> tuple:
+    """BMP_DECODE_SCHEMA row of a decoded H×W (gray, one channel) or
+    H×W×C array: (media_id, width, height, n_channels, Σv,
+    Σ v·(r+1)·(c+1)·(ch+1)), summed in int64."""
+    import numpy as np
+    px = px.astype(np.int64)
+    if px.ndim == 2:
+        px = px[:, :, None]
+    h, w, nch = px.shape
+    wgt = ((np.arange(h)[:, None, None] + 1)
+           * (np.arange(w)[None, :, None] + 1)
+           * (np.arange(nch)[None, None, :] + 1))
+    return (int(m), w, h, nch, int(px.sum()), int((px * wgt).sum()))
+
+
+def decode_pixels_batch(df: DataFrame, codec) -> DataFrame:
+    """(media_id, content) → ``pixel_stats`` of ``codec(content)``."""
+    return map_rows(df, lambda m, c: [pixel_stats(m, codec(bytes(c)))],
+                    BMP_DECODE_SCHEMA)
+
+
 def synth_bmp_images(df: DataFrame) -> DataFrame:
     """(media_id, w, h) → (media_id, content): encode the deterministic
     test image for each row as real BMP bytes, Arrow-batched."""
-    import pandas as pd
-
-    def _encode(batches: Iterator["pd.DataFrame"]) -> Iterator["pd.DataFrame"]:
-        for pdf in batches:
-            content = [encode_bmp(synth_pixels(int(m), int(w), int(h)))
-                       for m, w, h in zip(pdf["media_id"], pdf["w"],
-                                          pdf["h"])]
-            yield pd.DataFrame({"media_id": pdf["media_id"],
-                                "content": content})
-
-    from pmc_conversion_spark.util import ensure_parallelism
-    return ensure_parallelism(df).mapInPandas(
-        _encode, "media_id long, content binary")
+    return _synth(df, lambda m, w, h: encode_bmp(synth_pixels(m, w, h)),
+                  ("media_id", "w", "h"))
 
 
 def decode_bmp_batch(df: DataFrame) -> DataFrame:
@@ -273,26 +285,7 @@ def decode_bmp_batch(df: DataFrame) -> DataFrame:
     the geometry proof — it differs under any row-flip, channel-order
     or stride-padding error, so the oracle match certifies a correct
     decode, not just a correct byte count."""
-    import pandas as pd
-
-    def _decode(batches: Iterator["pd.DataFrame"]) -> Iterator["pd.DataFrame"]:
-        import numpy as np
-        for pdf in batches:
-            rows = []
-            for m, content in zip(pdf["media_id"], pdf["content"]):
-                px = decode_bmp(bytes(content)).astype(np.int64)
-                h, w, nch = px.shape
-                wgt = ((np.arange(h)[:, None, None] + 1)
-                       * (np.arange(w)[None, :, None] + 1)
-                       * (np.arange(nch)[None, None, :] + 1))
-                rows.append((int(m), w, h, nch, int(px.sum()),
-                             int((px * wgt).sum())))
-            yield pd.DataFrame(rows, columns=[
-                "media_id", "width", "height", "n_channels",
-                "pix_sum", "pix_weighted"])
-
-    from pmc_conversion_spark.util import ensure_parallelism
-    return ensure_parallelism(df).mapInPandas(_decode, BMP_DECODE_SCHEMA)
+    return decode_pixels_batch(df, decode_bmp)
 
 
 # ---------------------------------------------------------------------------
@@ -354,44 +347,14 @@ def synth_ppm_pixels(media_id: int, w: int, h: int):
 
 def synth_ppm_images(df: DataFrame) -> DataFrame:
     """(media_id, w, h) → (media_id, content) as real P6 bytes."""
-    import pandas as pd
-
-    def _encode(batches: Iterator["pd.DataFrame"]) -> Iterator["pd.DataFrame"]:
-        for pdf in batches:
-            content = [encode_ppm(synth_ppm_pixels(int(m), int(w), int(h)))
-                       for m, w, h in zip(pdf["media_id"], pdf["w"],
-                                          pdf["h"])]
-            yield pd.DataFrame({"media_id": pdf["media_id"],
-                                "content": content})
-
-    from pmc_conversion_spark.util import ensure_parallelism
-    return ensure_parallelism(df).mapInPandas(
-        _encode, "media_id long, content binary")
+    return _synth(df, lambda m, w, h: encode_ppm(synth_ppm_pixels(m, w, h)),
+                  ("media_id", "w", "h"))
 
 
 def decode_ppm_batch(df: DataFrame) -> DataFrame:
     """(media_id, content) → decoded stats via the REAL P6 parser; same
     position-weighted geometry proof as decode_bmp_batch."""
-    import pandas as pd
-
-    def _decode(batches: Iterator["pd.DataFrame"]) -> Iterator["pd.DataFrame"]:
-        import numpy as np
-        for pdf in batches:
-            rows = []
-            for m, content in zip(pdf["media_id"], pdf["content"]):
-                px = decode_ppm(bytes(content)).astype(np.int64)
-                h, w, nch = px.shape
-                wgt = ((np.arange(h)[:, None, None] + 1)
-                       * (np.arange(w)[None, :, None] + 1)
-                       * (np.arange(nch)[None, None, :] + 1))
-                rows.append((int(m), w, h, nch, int(px.sum()),
-                             int((px * wgt).sum())))
-            yield pd.DataFrame(rows, columns=[
-                "media_id", "width", "height", "n_channels",
-                "pix_sum", "pix_weighted"])
-
-    from pmc_conversion_spark.util import ensure_parallelism
-    return ensure_parallelism(df).mapInPandas(_decode, BMP_DECODE_SCHEMA)
+    return decode_pixels_batch(df, decode_ppm)
 
 
 # ---------------------------------------------------------------------------
@@ -533,47 +496,16 @@ def _rle8_palette():
 
 def synth_rle8_images(df: DataFrame) -> DataFrame:
     """(media_id, w, h) → (media_id, content): real BI_RLE8 bytes."""
-    import pandas as pd
-
     pal = _rle8_palette()
-
-    def _encode(batches: Iterator["pd.DataFrame"]) -> Iterator["pd.DataFrame"]:
-        for pdf in batches:
-            content = [encode_bmp_rle8(
-                synth_rle8_indices(int(m), int(w), int(h)), pal)
-                for m, w, h in zip(pdf["media_id"], pdf["w"], pdf["h"])]
-            yield pd.DataFrame({"media_id": pdf["media_id"],
-                                "content": content})
-
-    from pmc_conversion_spark.util import ensure_parallelism
-    return ensure_parallelism(df).mapInPandas(
-        _encode, "media_id long, content binary")
+    return _synth(df, lambda m, w, h: encode_bmp_rle8(
+        synth_rle8_indices(m, w, h), pal), ("media_id", "w", "h"))
 
 
 def decode_rle8_batch(df: DataFrame) -> DataFrame:
     """(media_id, content) → decoded stats via the REAL RLE8 parser —
     same position-weighted geometry proof as decode_bmp_batch (any
     run-length, padding, palette or row-order mistake changes it)."""
-    import pandas as pd
-
-    def _decode(batches: Iterator["pd.DataFrame"]) -> Iterator["pd.DataFrame"]:
-        import numpy as np
-        for pdf in batches:
-            rows = []
-            for m, content in zip(pdf["media_id"], pdf["content"]):
-                px = decode_bmp_rle8(bytes(content)).astype(np.int64)
-                h, w, nch = px.shape
-                wgt = ((np.arange(h)[:, None, None] + 1)
-                       * (np.arange(w)[None, :, None] + 1)
-                       * (np.arange(nch)[None, None, :] + 1))
-                rows.append((int(m), w, h, nch, int(px.sum()),
-                             int((px * wgt).sum())))
-            yield pd.DataFrame(rows, columns=[
-                "media_id", "width", "height", "n_channels",
-                "pix_sum", "pix_weighted"])
-
-    from pmc_conversion_spark.util import ensure_parallelism
-    return ensure_parallelism(df).mapInPandas(_decode, BMP_DECODE_SCHEMA)
+    return decode_pixels_batch(df, decode_bmp_rle8)
 
 
 # ---------------------------------------------------------------------------
@@ -651,20 +583,8 @@ def synth_pcm16(media_id: int, n: int):
 
 def synth_wav_files(df: DataFrame) -> DataFrame:
     """(media_id, n, sr) → (media_id, content): real RIFF/WAV bytes."""
-    import pandas as pd
-
-    def _encode(batches: Iterator["pd.DataFrame"]) -> Iterator["pd.DataFrame"]:
-        for pdf in batches:
-            content = [encode_wav_pcm16(synth_pcm16(int(m), int(n)),
-                                        int(sr))
-                       for m, n, sr in zip(pdf["media_id"], pdf["n"],
-                                           pdf["sr"])]
-            yield pd.DataFrame({"media_id": pdf["media_id"],
-                                "content": content})
-
-    from pmc_conversion_spark.util import ensure_parallelism
-    return ensure_parallelism(df).mapInPandas(
-        _encode, "media_id long, content binary")
+    return _synth(df, lambda m, n, sr: encode_wav_pcm16(synth_pcm16(m, n), sr),
+                  ("media_id", "n", "sr"))
 
 
 WAV_DECODE_SCHEMA = ("media_id long, sample_rate long, n_samples long, "
@@ -676,23 +596,15 @@ def decode_wav_batch(df: DataFrame) -> DataFrame:
     parser: sample count, rate, energy Σs² and the position-weighted
     Σ s·(i+1) that certifies sample ORDER (an endianness or offset
     slip changes it)."""
-    import pandas as pd
+    import numpy as np
 
-    def _decode(batches: Iterator["pd.DataFrame"]) -> Iterator["pd.DataFrame"]:
-        import numpy as np
-        for pdf in batches:
-            rows = []
-            for m, content in zip(pdf["media_id"], pdf["content"]):
-                sr, s = decode_wav_pcm16(bytes(content))
-                s64 = s.astype(np.int64)
-                rows.append((int(m), sr, len(s), int((s64 * s64).sum()),
-                             int((s64 * (np.arange(len(s64)) + 1)).sum())))
-            yield pd.DataFrame(rows, columns=[
-                "media_id", "sample_rate", "n_samples",
-                "energy", "weighted"])
+    def _decode(m, content):
+        sr, s = decode_wav_pcm16(bytes(content))
+        s64 = s.astype(np.int64)
+        yield (int(m), sr, len(s), int((s64 * s64).sum()),
+               int((s64 * (np.arange(len(s64)) + 1)).sum()))
 
-    from pmc_conversion_spark.util import ensure_parallelism
-    return ensure_parallelism(df).mapInPandas(_decode, WAV_DECODE_SCHEMA)
+    return map_rows(df, _decode, WAV_DECODE_SCHEMA)
 
 
 SOBEL_SCHEMA = ("media_id long, width long, height long, "
@@ -709,30 +621,22 @@ def sobel_energy_batch(df: DataFrame) -> DataFrame:
     engine-exact; the energy moves under ANY geometry slip (row flip,
     channel order, stride), making it a second independent certificate
     on the decoder beyond decode_bmp_batch's weighted sum."""
-    import pandas as pd
+    import numpy as np
 
-    def _sobel(batches: Iterator["pd.DataFrame"]) -> Iterator["pd.DataFrame"]:
-        import numpy as np
-        for pdf in batches:
-            rows = []
-            for m, content in zip(pdf["media_id"], pdf["content"]):
-                px = decode_bmp(bytes(content)).astype(np.int64)
-                h, w, _ = px.shape
-                lum = (px[:, :, 0] * 299 + px[:, :, 1] * 587
-                       + px[:, :, 2] * 114) // 1000
-                gx = (-lum[:-2, :-2] + lum[:-2, 2:]
-                      - 2 * lum[1:-1, :-2] + 2 * lum[1:-1, 2:]
-                      - lum[2:, :-2] + lum[2:, 2:])
-                gy = (-lum[:-2, :-2] - 2 * lum[:-2, 1:-1] - lum[:-2, 2:]
-                      + lum[2:, :-2] + 2 * lum[2:, 1:-1] + lum[2:, 2:])
-                rows.append((int(m), w, h, int(gx.size),
-                             int(np.abs(gx).sum() + np.abs(gy).sum())))
-            yield pd.DataFrame(rows, columns=[
-                "media_id", "width", "height", "n_interior",
-                "edge_energy"])
+    def _sobel(m, content):
+        px = decode_bmp(bytes(content)).astype(np.int64)
+        h, w, _ = px.shape
+        lum = (px[:, :, 0] * 299 + px[:, :, 1] * 587
+               + px[:, :, 2] * 114) // 1000
+        gx = (-lum[:-2, :-2] + lum[:-2, 2:]
+              - 2 * lum[1:-1, :-2] + 2 * lum[1:-1, 2:]
+              - lum[2:, :-2] + lum[2:, 2:])
+        gy = (-lum[:-2, :-2] - 2 * lum[:-2, 1:-1] - lum[:-2, 2:]
+              + lum[2:, :-2] + 2 * lum[2:, 1:-1] + lum[2:, 2:])
+        yield (int(m), w, h, int(gx.size),
+               int(np.abs(gx).sum() + np.abs(gy).sum()))
 
-    from pmc_conversion_spark.util import ensure_parallelism
-    return ensure_parallelism(df).mapInPandas(_sobel, SOBEL_SCHEMA)
+    return map_rows(df, _sobel, SOBEL_SCHEMA)
 
 
 # ---------------------------------------------------------------------------
@@ -1790,19 +1694,8 @@ def synth_jpeg_prog_coeffs(media_id: int):
 def synth_jpeg_prog_images(df: DataFrame) -> DataFrame:
     """(media_id) → (media_id, content): real progressive (SOF2)
     grayscale JPEGs, 32×8 (four blocks, four scans each)."""
-    import pandas as pd
-
-    def _encode(batches: Iterator["pd.DataFrame"]) -> Iterator["pd.DataFrame"]:
-        for pdf in batches:
-            content = [encode_jpeg_gray_progressive(
-                           synth_jpeg_prog_coeffs(int(m)), 32, 8)
-                       for m in pdf["media_id"]]
-            yield pd.DataFrame({"media_id": pdf["media_id"],
-                                "content": content})
-
-    from pmc_conversion_spark.util import ensure_parallelism
-    return ensure_parallelism(df).mapInPandas(
-        _encode, "media_id long, content binary")
+    return _synth(df, lambda m: encode_jpeg_gray_progressive(
+        synth_jpeg_prog_coeffs(m), 32, 8))
 
 
 def decode_jpeg_prog_batch(df: DataFrame) -> DataFrame:
@@ -1810,28 +1703,7 @@ def decode_jpeg_prog_batch(df: DataFrame) -> DataFrame:
     parser — the position-weighted sum certifies the multi-scan walk,
     spectral-selection bands, EOB-run decode, the DC point transform
     AND its refinement bit, and the shared fixed-point IDCT."""
-    import pandas as pd
-
-    def _decode(batches: Iterator["pd.DataFrame"]) -> Iterator["pd.DataFrame"]:
-        import numpy as np
-        for pdf in batches:
-            rows = []
-            for m, content in zip(pdf["media_id"], pdf["content"]):
-                px = decode_jpeg_gray_progressive(bytes(content))
-                h, w = px.shape
-                wgt = ((np.arange(h)[:, None] + 1)
-                       * (np.arange(w)[None, :] + 1))
-                rows.append((int(m), w, h, 1,
-                             int(px.sum(dtype=np.int64)),
-                             int((px.astype(np.int64) * wgt).sum())))
-            yield pd.DataFrame(rows, columns=[
-                "media_id", "width", "height", "n_channels",
-                "pix_sum", "pix_weighted"])
-
-    from pmc_conversion_spark.util import ensure_parallelism
-    return ensure_parallelism(df).mapInPandas(
-        _decode, "media_id long, width int, height int, "
-                 "n_channels int, pix_sum long, pix_weighted long")
+    return decode_pixels_batch(df, decode_jpeg_gray_progressive)
 
 
 def _synth_color_block(media_id: int, comp: int, gb: int):
@@ -1863,20 +1735,8 @@ def synth_jpeg_color_coeffs(media_id: int):
 
 def synth_jpeg_color_images(df: DataFrame) -> DataFrame:
     """(media_id) → (media_id, content): real 4:2:0 color JPEGs."""
-    import pandas as pd
-
-    def _encode(batches: Iterator["pd.DataFrame"]) -> Iterator["pd.DataFrame"]:
-        for pdf in batches:
-            content = []
-            for m in pdf["media_id"]:
-                yb, cbb, crb = synth_jpeg_color_coeffs(int(m))
-                content.append(encode_jpeg_color(yb, cbb, crb, 32, 16))
-            yield pd.DataFrame({"media_id": pdf["media_id"],
-                                "content": content})
-
-    from pmc_conversion_spark.util import ensure_parallelism
-    return ensure_parallelism(df).mapInPandas(
-        _encode, "media_id long, content binary")
+    return _synth(df, lambda m: encode_jpeg_color(
+        *synth_jpeg_color_coeffs(m), 32, 16))
 
 
 def decode_jpeg_color_batch(df: DataFrame) -> DataFrame:
@@ -1884,44 +1744,12 @@ def decode_jpeg_color_batch(df: DataFrame) -> DataFrame:
     parser; the channel-and-position-weighted sum certifies the MCU
     interleave, per-component predictors/tables, chroma upsample and
     the fixed-point color convert in one number."""
-    import pandas as pd
-
-    def _decode(batches: Iterator["pd.DataFrame"]) -> Iterator["pd.DataFrame"]:
-        import numpy as np
-        for pdf in batches:
-            rows = []
-            for m, content in zip(pdf["media_id"], pdf["content"]):
-                rgb = decode_jpeg_color(bytes(content))
-                h, w, _ = rgb.shape
-                wgt = ((np.arange(h)[:, None, None] + 1)
-                       * (np.arange(w)[None, :, None] + 1)
-                       * (np.arange(3)[None, None, :] + 1))
-                rows.append((int(m), w, h, 3, int(rgb.sum()),
-                             int((rgb * wgt).sum())))
-            yield pd.DataFrame(rows, columns=[
-                "media_id", "width", "height", "n_channels",
-                "pix_sum", "pix_weighted"])
-
-    from pmc_conversion_spark.util import ensure_parallelism
-    return ensure_parallelism(df).mapInPandas(
-        _decode, "media_id long, width int, height int, "
-                 "n_channels int, pix_sum long, pix_weighted long")
+    return decode_pixels_batch(df, decode_jpeg_color)
 
 
 def synth_jpeg_images(df: DataFrame) -> DataFrame:
     """(media_id) → (media_id, content): real baseline-JPEG bytes."""
-    import pandas as pd
-
-    def _encode(batches: Iterator["pd.DataFrame"]) -> Iterator["pd.DataFrame"]:
-        for pdf in batches:
-            content = [encode_jpeg_gray(synth_jpeg_coeffs(int(m)), 16, 8)
-                       for m in pdf["media_id"]]
-            yield pd.DataFrame({"media_id": pdf["media_id"],
-                                "content": content})
-
-    from pmc_conversion_spark.util import ensure_parallelism
-    return ensure_parallelism(df).mapInPandas(
-        _encode, "media_id long, content binary")
+    return _synth(df, lambda m: encode_jpeg_gray(synth_jpeg_coeffs(m), 16, 8))
 
 
 def decode_jpeg_batch(df: DataFrame) -> DataFrame:
@@ -1929,45 +1757,21 @@ def decode_jpeg_batch(df: DataFrame) -> DataFrame:
     the position-weighted sum certifies Huffman decode, DC
     prediction, zigzag, dequantization and the fixed-point IDCT in
     one number."""
-    import pandas as pd
-
-    def _decode(batches: Iterator["pd.DataFrame"]) -> Iterator["pd.DataFrame"]:
-        import numpy as np
-        for pdf in batches:
-            rows = []
-            for m, content in zip(pdf["media_id"], pdf["content"]):
-                px = decode_jpeg_gray(bytes(content))
-                h, w = px.shape
-                wgt = ((np.arange(h)[:, None] + 1)
-                       * (np.arange(w)[None, :] + 1))
-                rows.append((int(m), w, h, 1, int(px.sum()),
-                             int((px * wgt).sum())))
-            yield pd.DataFrame(rows, columns=[
-                "media_id", "width", "height", "n_channels",
-                "pix_sum", "pix_weighted"])
-
-    from pmc_conversion_spark.util import ensure_parallelism
-    return ensure_parallelism(df).mapInPandas(_decode, BMP_DECODE_SCHEMA)
+    return decode_pixels_batch(df, decode_jpeg_gray)
 
 
 def jpeg_entropy_stats_batch(df: DataFrame) -> DataFrame:
     """(media_id) → (media_id, entropy_bits, entropy_bytes) through
     the REAL entropy encoder (bit count taken before padding) — the
     symbolic Annex-K code-length oracle reproduces both numbers."""
-    import pandas as pd
 
-    def _stats(batches: Iterator["pd.DataFrame"]) -> Iterator["pd.DataFrame"]:
-        for pdf in batches:
-            rows = []
-            for m in pdf["media_id"]:
-                bits = jpeg_entropy_bits(synth_jpeg_coeffs(int(m)))
-                rows.append((int(m), bits, (bits + 7) // 8))
-            yield pd.DataFrame(rows, columns=[
-                "media_id", "entropy_bits", "entropy_bytes"])
+    def _stats(m):
+        bits = jpeg_entropy_bits(synth_jpeg_coeffs(int(m)))
+        yield (int(m), bits, (bits + 7) // 8)
 
-    from pmc_conversion_spark.util import ensure_parallelism
-    return ensure_parallelism(df).mapInPandas(
-        _stats, "media_id long, entropy_bits long, entropy_bytes long")
+    return map_rows(df, _stats,
+                    "media_id long, entropy_bits long, entropy_bytes long",
+                    ("media_id",))
 
 
 # ---------------------------------------------------------------------------
@@ -2289,19 +2093,8 @@ def decode_png_palette(content: bytes):
 def synth_png_palette_images(df: DataFrame) -> DataFrame:
     """(media_id) → (media_id, content): real indexed-colour PNGs,
     24×16, per-image palette (synth_png_pixels as the index plane)."""
-    import pandas as pd
-
-    def _encode(batches: Iterator["pd.DataFrame"]) -> Iterator["pd.DataFrame"]:
-        for pdf in batches:
-            content = [encode_png_palette(synth_png_pixels(int(m), 24, 16),
-                                          synth_png_palette(int(m)))
-                       for m in pdf["media_id"]]
-            yield pd.DataFrame({"media_id": pdf["media_id"],
-                                "content": content})
-
-    from pmc_conversion_spark.util import ensure_parallelism
-    return ensure_parallelism(df).mapInPandas(
-        _encode, "media_id long, content binary")
+    return _synth(df, lambda m: encode_png_palette(
+        synth_png_pixels(m, 24, 16), synth_png_palette(m)))
 
 
 def decode_png_palette_batch(df: DataFrame) -> DataFrame:
@@ -2309,89 +2102,27 @@ def decode_png_palette_batch(df: DataFrame) -> DataFrame:
     PNG parser; the channel-and-position-weighted sum certifies the
     chunk walk, PLTE handling, filter reconstruction and the palette
     lookup in one number."""
-    import pandas as pd
-
-    def _decode(batches: Iterator["pd.DataFrame"]) -> Iterator["pd.DataFrame"]:
-        import numpy as np
-        for pdf in batches:
-            rows = []
-            for m, content in zip(pdf["media_id"], pdf["content"]):
-                rgb = decode_png_palette(bytes(content)).astype(np.int64)
-                h, w, _ = rgb.shape
-                wgt = ((np.arange(h)[:, None, None] + 1)
-                       * (np.arange(w)[None, :, None] + 1)
-                       * (np.arange(3)[None, None, :] + 1))
-                rows.append((int(m), w, h, 3, int(rgb.sum()),
-                             int((rgb * wgt).sum())))
-            yield pd.DataFrame(rows, columns=[
-                "media_id", "width", "height", "n_channels",
-                "pix_sum", "pix_weighted"])
-
-    from pmc_conversion_spark.util import ensure_parallelism
-    return ensure_parallelism(df).mapInPandas(
-        _decode, "media_id long, width int, height int, "
-                 "n_channels int, pix_sum long, pix_weighted long")
+    return decode_pixels_batch(df, decode_png_palette)
 
 
 def synth_png_adam7_images(df: DataFrame) -> DataFrame:
     """(media_id) → (media_id, content): real Adam7-interlaced PNG
     bytes, 21×11 gray — odd dims so every pass has a ragged edge and
     none is empty."""
-    import pandas as pd
-
-    def _encode(batches: Iterator["pd.DataFrame"]) -> Iterator["pd.DataFrame"]:
-        for pdf in batches:
-            content = [encode_png_gray_adam7(
-                           synth_png_pixels(int(m), 21, 11))
-                       for m in pdf["media_id"]]
-            yield pd.DataFrame({"media_id": pdf["media_id"],
-                                "content": content})
-
-    from pmc_conversion_spark.util import ensure_parallelism
-    return ensure_parallelism(df).mapInPandas(
-        _encode, "media_id long, content binary")
+    return _synth(df, lambda m: encode_png_gray_adam7(
+        synth_png_pixels(m, 21, 11)))
 
 
 def synth_png_images(df: DataFrame) -> DataFrame:
     """(media_id) → (media_id, content): real PNG bytes, 24×16 gray."""
-    import pandas as pd
-
-    def _encode(batches: Iterator["pd.DataFrame"]) -> Iterator["pd.DataFrame"]:
-        for pdf in batches:
-            content = [encode_png_gray(synth_png_pixels(int(m), 24, 16))
-                       for m in pdf["media_id"]]
-            yield pd.DataFrame({"media_id": pdf["media_id"],
-                                "content": content})
-
-    from pmc_conversion_spark.util import ensure_parallelism
-    return ensure_parallelism(df).mapInPandas(
-        _encode, "media_id long, content binary")
+    return _synth(df, lambda m: encode_png_gray(synth_png_pixels(m, 24, 16)))
 
 
 def decode_png_batch(df: DataFrame) -> DataFrame:
     """(media_id, content) → decoded stats via the REAL PNG parser —
     the position-weighted sum certifies chunk reassembly, inflate,
     and all five unfilter paths in one number."""
-    import pandas as pd
-
-    def _decode(batches: Iterator["pd.DataFrame"]) -> Iterator["pd.DataFrame"]:
-        import numpy as np
-        for pdf in batches:
-            rows = []
-            for m, content in zip(pdf["media_id"], pdf["content"]):
-                px = decode_png_gray(bytes(content))
-                h, w = px.shape
-                wgt = ((np.arange(h)[:, None] + 1)
-                       * (np.arange(w)[None, :] + 1))
-                rows.append((int(m), w, h, 1,
-                             int(px.sum(dtype=np.int64)),
-                             int((px.astype(np.int64) * wgt).sum())))
-            yield pd.DataFrame(rows, columns=[
-                "media_id", "width", "height", "n_channels",
-                "pix_sum", "pix_weighted"])
-
-    from pmc_conversion_spark.util import ensure_parallelism
-    return ensure_parallelism(df).mapInPandas(_decode, BMP_DECODE_SCHEMA)
+    return decode_pixels_batch(df, decode_png_gray)
 
 
 # ---------------------------------------------------------------------------
@@ -2680,58 +2411,17 @@ def synth_gif89a_images(df: DataFrame) -> DataFrame:
     """(media_id) → (media_id, content): real GIF89a bytes — GCE +
     comment extensions, reversed LOCAL color table, interlaced rows —
     19×13 so all four interlace passes are non-trivial."""
-    import pandas as pd
-
-    def _encode(batches: Iterator["pd.DataFrame"]) -> Iterator["pd.DataFrame"]:
-        for pdf in batches:
-            content = [encode_gif89a_interlaced(
-                           synth_gif_pixels(int(m), 19, 13))
-                       for m in pdf["media_id"]]
-            yield pd.DataFrame({"media_id": pdf["media_id"],
-                                "content": content})
-
-    from pmc_conversion_spark.util import ensure_parallelism
-    return ensure_parallelism(df).mapInPandas(
-        _encode, "media_id long, content binary")
+    return _synth(df, lambda m: encode_gif89a_interlaced(
+        synth_gif_pixels(m, 19, 13)))
 
 
 def synth_gif_images(df: DataFrame) -> DataFrame:
     """(media_id) → (media_id, content): real GIF87a bytes, 20×12."""
-    import pandas as pd
-
-    def _encode(batches: Iterator["pd.DataFrame"]) -> Iterator["pd.DataFrame"]:
-        for pdf in batches:
-            content = [encode_gif_gray(synth_gif_pixels(int(m), 20, 12))
-                       for m in pdf["media_id"]]
-            yield pd.DataFrame({"media_id": pdf["media_id"],
-                                "content": content})
-
-    from pmc_conversion_spark.util import ensure_parallelism
-    return ensure_parallelism(df).mapInPandas(
-        _encode, "media_id long, content binary")
+    return _synth(df, lambda m: encode_gif_gray(synth_gif_pixels(m, 20, 12)))
 
 
 def decode_gif_batch(df: DataFrame) -> DataFrame:
     """(media_id, content) → decoded stats via the REAL GIF parser —
     the position-weighted sum certifies sub-block reassembly, the
     from-scratch LZW decode, and the palette lookup."""
-    import pandas as pd
-
-    def _decode(batches: Iterator["pd.DataFrame"]) -> Iterator["pd.DataFrame"]:
-        import numpy as np
-        for pdf in batches:
-            rows = []
-            for m, content in zip(pdf["media_id"], pdf["content"]):
-                px = decode_gif_gray(bytes(content))
-                h, w = px.shape
-                wgt = ((np.arange(h)[:, None] + 1)
-                       * (np.arange(w)[None, :] + 1))
-                rows.append((int(m), w, h, 1,
-                             int(px.sum(dtype=np.int64)),
-                             int((px.astype(np.int64) * wgt).sum())))
-            yield pd.DataFrame(rows, columns=[
-                "media_id", "width", "height", "n_channels",
-                "pix_sum", "pix_weighted"])
-
-    from pmc_conversion_spark.util import ensure_parallelism
-    return ensure_parallelism(df).mapInPandas(_decode, BMP_DECODE_SCHEMA)
+    return decode_pixels_batch(df, decode_gif_gray)

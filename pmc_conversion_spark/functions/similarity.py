@@ -364,7 +364,7 @@ def embedding_near_dup_blocked(vectors: DataFrame, *, threshold: float = 0.9,
             nb += y * y
         return round(dot / ((na ** 0.5) * (nb ** 0.5)), round_digits)
 
-    def per_pair(key, pdf: "pd.DataFrame") -> "pd.DataFrame":
+    def per_pair(key, pdf):
         bi, bj = key[0], key[1]
         left = pdf[pdf["blk"] == bi]
         right = pdf[pdf["blk"] == bj]
@@ -500,7 +500,7 @@ def knn_join_blocked(vectors: DataFrame, k: int, *, n_blocks: int | None = None,
                                 part.ravel()])
         return qs[mask], ns[mask]
 
-    def per_pair(key, pdf: pd.DataFrame) -> pd.DataFrame:
+    def per_pair(key, pdf):
         bi, bj = key
         left = pdf[pdf["blk"] == bi]
         right = pdf[pdf["blk"] == bj]

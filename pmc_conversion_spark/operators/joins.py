@@ -72,19 +72,6 @@ def codebook_decode(df: DataFrame, codebook: DataFrame,
     return out
 
 
-def fk_violations(child: DataFrame, parent: DataFrame,
-                  child_key: str, parent_key: str) -> DataFrame:
-    """Rows of ``child`` whose FK has no match in ``parent``.
-
-    Reference: referential model biosource.individual_id -> individual
-    (biosource.tsv:1); violations must fail the run (sync.py:51-74
-    error-path style), so callers assert this is empty.
-    """
-    return child.join(
-        F.broadcast(parent.select(F.col(parent_key).alias(child_key))),
-        on=child_key, how="left_anti")
-
-
 def dirdiff(old: DataFrame, new: DataFrame) -> DataFrame:
     """Classify (path, sha1) pairs as add / remove / unchanged.
 

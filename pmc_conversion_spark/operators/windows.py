@@ -594,14 +594,6 @@ def next_value_distributed(df: DataFrame, order_col: str,
             .drop("__bucket", "__lead", "__next_min"))
 
 
-def topk_per_group(df: DataFrame, group_cols: Sequence[str],
-                   order_by: Sequence, k: int) -> DataFrame:
-    """Top-k rows per group with a total order (deterministic ties)."""
-    w = Window.partitionBy(*group_cols).orderBy(*order_by)
-    return (df.withColumn("__rn", F.row_number().over(w))
-            .filter(F.col("__rn") <= k).drop("__rn"))
-
-
 def apply_cdc(base: DataFrame, changes: DataFrame, key: str,
               seq_col: str, op_col: str,
               attrs: Sequence[str]) -> DataFrame:

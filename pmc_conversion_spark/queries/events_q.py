@@ -18,6 +18,7 @@ from pyspark.sql import functions as F
 
 from pmc_conversion_spark import tables
 from pmc_conversion_spark.queries import register
+from pmc_conversion_spark.util import map_rows
 
 
 def _events(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -6349,42 +6350,33 @@ def ts_dtw_distance(spark: SparkSession, sf_dir: str) -> DataFrame:
             "w -> coalesce(element_at(m, w), 0L))").alias("bv")))
     frame = al.crossJoin(F.broadcast(gl))
 
-    def _dtw(batches):
+    def _dtw(nm, na, av, nb, bv):
         import numpy as np
-        import pandas as pd
         BIG = np.int64(2) ** 62
-        for pdf in batches:
-            rows = []
-            for nm, na, av, nb, bv in zip(
-                    pdf["n_name"], pdf["na"], pdf["av"],
-                    pdf["nb"], pdf["bv"]):
-                a = np.asarray(av, dtype=np.int64)
-                b = np.asarray(bv, dtype=np.int64)
-                na_i, nb_i = int(na), int(nb)
-                m = 52
-                D = np.full((m, m), BIG, dtype=np.int64)
-                for i in range(m):
-                    for j in range(max(0, i - 3),
-                                   min(m, i + 4)):
-                        cst = abs(a[i] * nb_i - b[j] * na_i)
-                        if i == 0 and j == 0:
-                            D[i, j] = cst
-                            continue
-                        best = BIG
-                        if i > 0 and D[i - 1, j] < best:
-                            best = D[i - 1, j]
-                        if j > 0 and D[i, j - 1] < best:
-                            best = D[i, j - 1]
-                        if i > 0 and j > 0 and D[i - 1, j - 1] < best:
-                            best = D[i - 1, j - 1]
-                        D[i, j] = cst + best
-                rows.append((nm, int(D[m - 1, m - 1]), na_i, nb_i))
-            yield pd.DataFrame(rows, columns=[
-                "n_name", "dtw_dist", "na", "nb"])
+        a = np.asarray(av, dtype=np.int64)
+        b = np.asarray(bv, dtype=np.int64)
+        na_i, nb_i = int(na), int(nb)
+        m = 52
+        D = np.full((m, m), BIG, dtype=np.int64)
+        for i in range(m):
+            for j in range(max(0, i - 3), min(m, i + 4)):
+                cst = abs(a[i] * nb_i - b[j] * na_i)
+                if i == 0 and j == 0:
+                    D[i, j] = cst
+                    continue
+                best = BIG
+                if i > 0 and D[i - 1, j] < best:
+                    best = D[i - 1, j]
+                if j > 0 and D[i, j - 1] < best:
+                    best = D[i, j - 1]
+                if i > 0 and j > 0 and D[i - 1, j - 1] < best:
+                    best = D[i - 1, j - 1]
+                D[i, j] = cst + best
+        yield (nm, int(D[m - 1, m - 1]), na_i, nb_i)
 
-    from pmc_conversion_spark.util import ensure_parallelism
-    res = ensure_parallelism(frame).mapInPandas(
-        _dtw, "n_name string, dtw_dist long, na long, nb long")
+    res = map_rows(frame, _dtw,
+                   "n_name string, dtw_dist long, na long, nb long",
+                   ("n_name", "na", "av", "nb", "bv"))
     return res.select(
         "n_name", "dtw_dist",
         F.round(F.col("dtw_dist").cast("double")

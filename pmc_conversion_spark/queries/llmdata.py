@@ -22,6 +22,7 @@ from pmc_conversion_spark.functions import multimodal as MM
 from pmc_conversion_spark.functions import similarity as SIM
 from pmc_conversion_spark.functions import text as TX
 from pmc_conversion_spark.queries import register
+from pmc_conversion_spark.util import map_rows
 
 # SQL fragment shared by the text oracles: whitespace tokens of the
 # lowercased text (DuckDB twin of text.ws_tokens ∘ lower). The CASE
@@ -3224,11 +3225,6 @@ def pipeline_curriculum_order(spark: SparkSession, sf_dir: str) -> DataFrame:
 _PQ_M, _PQ_DIM, _PQ_K = 4, 16, 8
 
 
-def _pq_sub_sql(arr: str, sub: int) -> str:
-    lo = sub * _PQ_DIM
-    return f"({arr}::DOUBLE[])[{lo + 1}:{lo + _PQ_DIM}]"
-
-
 @register(
     "sim_pq_encode",
     oracle=f"""
@@ -5305,36 +5301,21 @@ def mm_image_resize_nn(spark: SparkSession, sf_dir: str) -> DataFrame:
     a wrong index formula or axis swap in the resize breaks the
     weighted sum. Decode+resize run in one Arrow-batched mapInPandas
     stage — one pass over the blobs."""
-    import pandas as pd
-
     base = (_docs(spark, sf_dir)
             .select(F.col("doc_id").alias("media_id"),
                     (F.lit(4) + F.col("doc_id") % 13).cast("int").alias("w"),
                     (F.lit(4) + F.col("doc_id") % 6).cast("int").alias("h")))
     encoded = MM.synth_bmp_images(base)
 
-    def _resize(batches):
+    def _resize(m, content):
         import numpy as np
-        for pdf in batches:
-            rows = []
-            for m, content in zip(pdf["media_id"], pdf["content"]):
-                px = MM.decode_bmp(bytes(content)).astype(np.int64)
-                h, w, _ = px.shape
-                rr = (np.arange(8) * h) // 8
-                cc = (np.arange(8) * w) // 8
-                out = px[np.ix_(rr, cc)]          # 8×8×3 NN sample
-                wgt = ((np.arange(8)[:, None, None] + 1)
-                       * (np.arange(8)[None, :, None] + 1)
-                       * (np.arange(3)[None, None, :] + 1))
-                rows.append((int(m), 8, 8, 3, int(out.sum()),
-                             int((out * wgt).sum())))
-            yield pd.DataFrame(rows, columns=[
-                "media_id", "width", "height", "n_channels",
-                "pix_sum", "pix_weighted"])
+        px = MM.decode_bmp(bytes(content))
+        h, w, _ = px.shape
+        rr = (np.arange(8) * h) // 8
+        cc = (np.arange(8) * w) // 8
+        yield MM.pixel_stats(m, px[np.ix_(rr, cc)])   # 8×8×3 NN sample
 
-    from pmc_conversion_spark.util import ensure_parallelism
-    return ensure_parallelism(encoded).mapInPandas(
-        _resize, MM.BMP_DECODE_SCHEMA)
+    return map_rows(encoded, _resize, MM.BMP_DECODE_SCHEMA)
 
 
 @register(
@@ -5363,32 +5344,22 @@ def mm_image_grayscale_hist(spark: SparkSession, sf_dir: str) -> DataFrame:
     filters start from. Integer luma keeps both engines exact. The
     decode+histogram is one Arrow stage; the per-image histogram rows
     (≤16 per image) shuffle, never pixels."""
-    import pandas as pd
-
     base = (_docs(spark, sf_dir)
             .select(F.col("doc_id").alias("media_id"),
                     (F.lit(4) + F.col("doc_id") % 13).cast("int").alias("w"),
                     (F.lit(4) + F.col("doc_id") % 7).cast("int").alias("h")))
     encoded = MM.synth_bmp_images(base)
 
-    def _hist(batches):
+    def _hist(m, content):
         import numpy as np
-        for pdf in batches:
-            out_m, out_b, out_n = [], [], []
-            for m, content in zip(pdf["media_id"], pdf["content"]):
-                px = MM.decode_bmp(bytes(content)).astype(np.int64)
-                luma = (px[:, :, 0] * 299 + px[:, :, 1] * 587
-                        + px[:, :, 2] * 114) // 1000
-                bins, counts = np.unique(luma // 16, return_counts=True)
-                out_m.extend([int(m)] * len(bins))
-                out_b.extend(int(b) for b in bins)
-                out_n.extend(int(c) for c in counts)
-            yield pd.DataFrame({"media_id": out_m, "bin": out_b,
-                                "n_px": out_n})
+        px = MM.decode_bmp(bytes(content)).astype(np.int64)
+        luma = (px[:, :, 0] * 299 + px[:, :, 1] * 587
+                + px[:, :, 2] * 114) // 1000
+        bins, counts = np.unique(luma // 16, return_counts=True)
+        for b, c in zip(bins, counts):
+            yield (int(m), int(b), int(c))
 
-    from pmc_conversion_spark.util import ensure_parallelism
-    return ensure_parallelism(encoded).mapInPandas(
-        _hist, "media_id long, bin long, n_px long")
+    return map_rows(encoded, _hist, "media_id long, bin long, n_px long")
 
 
 @register(
@@ -5736,40 +5707,32 @@ def mm_image_ahash(spark: SparkSession, sf_dir: str) -> DataFrame:
     (luma·64 > Σluma — no float mean), and the hash is reported
     modulo 2⁶³−1 so it stays in BIGINT on both engines. One Arrow
     stage; 1 row of 2 ints per image shuffles."""
-    import pandas as pd
-
     base = (_docs(spark, sf_dir)
             .select(F.col("doc_id").alias("media_id"),
                     (F.lit(4) + F.col("doc_id") % 13).cast("int").alias("w"),
                     (F.lit(4) + F.col("doc_id") % 6).cast("int").alias("h")))
     encoded = MM.synth_bmp_images(base)
 
-    def _ahash(batches):
+    def _ahash(m, content):
         import numpy as np
         M = 9223372036854775807
-        for pdf in batches:
-            rows = []
-            for m, content in zip(pdf["media_id"], pdf["content"]):
-                px = MM.decode_bmp(bytes(content)).astype(np.int64)
-                h, w, _ = px.shape
-                rr = (np.arange(8) * h) // 8
-                cc = (np.arange(8) * w) // 8
-                small = px[np.ix_(rr, cc)]
-                luma = (small[:, :, 0] * 299 + small[:, :, 1] * 587
-                        + small[:, :, 2] * 114)
-                s = int(luma.sum())
-                bits = (luma * 64 > s).astype(np.int64).ravel()
-                hash_mod = 0
-                for i, b in enumerate(bits):
-                    if b:
-                        hash_mod = (hash_mod + pow(2, 63 - i, M)) % M
-                rows.append((int(m), int(bits.sum()), hash_mod))
-            yield pd.DataFrame(rows, columns=[
-                "media_id", "n_bits_set", "ahash_mod"])
+        px = MM.decode_bmp(bytes(content)).astype(np.int64)
+        h, w, _ = px.shape
+        rr = (np.arange(8) * h) // 8
+        cc = (np.arange(8) * w) // 8
+        small = px[np.ix_(rr, cc)]
+        luma = (small[:, :, 0] * 299 + small[:, :, 1] * 587
+                + small[:, :, 2] * 114)
+        s = int(luma.sum())
+        bits = (luma * 64 > s).astype(np.int64).ravel()
+        hash_mod = 0
+        for i, b in enumerate(bits):
+            if b:
+                hash_mod = (hash_mod + pow(2, 63 - i, M)) % M
+        yield (int(m), int(bits.sum()), hash_mod)
 
-    from pmc_conversion_spark.util import ensure_parallelism
-    return ensure_parallelism(encoded).mapInPandas(
-        _ahash, "media_id long, n_bits_set long, ahash_mod long")
+    return map_rows(encoded, _ahash,
+                    "media_id long, n_bits_set long, ahash_mod long")
 
 
 @register(
@@ -6096,31 +6059,21 @@ def mm_audio_zero_crossings(spark: SparkSession, sf_dir: str) -> DataFrame:
     classic first column of an audio quality filter. Real numpy sign
     logic in Arrow-batched mapInPandas; exact integer counts give a
     full value oracle."""
-    import pandas as pd
-
     d = _docs(spark, sf_dir)
     media = d.select(F.col("doc_id").alias("media_id"), "text")
 
-    def _zcr(batches):
+    def _zcr(m, text):
         import numpy as np
-        for pdf in batches:
-            out_m, out_f, out_n = [], [], []
-            for m, text in zip(pdf["media_id"], pdf["text"]):
-                s = np.frombuffer(text[:1024].encode("utf-8", "ignore"),
-                                  dtype=np.uint8).astype(np.int64) - 96
-                n_frames = len(s) // 256
-                for fidx in range(n_frames):
-                    # 255 in-frame pairs; never the cross-frame pair
-                    w = s[fidx * 256:(fidx + 1) * 256]
-                    nz = int(((w[:-1] >= 0) != (w[1:] >= 0)).sum())
-                    out_m.append(int(m)); out_f.append(fidx)
-                    out_n.append(nz)
-            yield pd.DataFrame({"media_id": out_m, "frame": out_f,
-                                "n_zero_crossings": out_n})
+        s = np.frombuffer(text[:1024].encode("utf-8", "ignore"),
+                          dtype=np.uint8).astype(np.int64) - 96
+        for fidx in range(len(s) // 256):
+            # 255 in-frame pairs; never the cross-frame pair
+            w = s[fidx * 256:(fidx + 1) * 256]
+            yield (int(m), fidx, int(((w[:-1] >= 0) != (w[1:] >= 0)).sum()))
 
-    from pmc_conversion_spark.util import ensure_parallelism
-    return ensure_parallelism(media).mapInPandas(
-        _zcr, "media_id long, frame int, n_zero_crossings long")
+    return map_rows(media, _zcr,
+                    "media_id long, frame int, n_zero_crossings long",
+                    ("media_id", "text"))
 
 
 @register(
@@ -7993,31 +7946,24 @@ def mm_audio_neardup_energy(spark: SparkSession,
     signals under second media_ids, so every planted pair must
     surface with distance 0 and coincidental block collisions must
     die at the threshold. Integer-exact end to end."""
-    import pandas as pd
-
     ids = spark.range(60).select(F.col("id").alias("media_id"),
                                  (F.col("id") % 30).alias("seed"))
 
-    def _energies(batches):
+    def _energies(mid, seed):
         import numpy as np
-        for pdf in batches:
-            rows = []
-            for mid, seed in zip(pdf["media_id"], pdf["seed"]):
-                j = np.arange(1024, dtype=np.int64)
-                sig = (int(seed) * 13 + j * 7) % 256
-                for k in range(4):
-                    fr = sig[k * 256:(k + 1) * 256]
-                    rows.append((int(mid), k, int((fr * fr).sum())))
-            yield pd.DataFrame(rows,
-                               columns=["media_id", "frame", "energy"])
+        j = np.arange(1024, dtype=np.int64)
+        sig = (int(seed) * 13 + j * 7) % 256
+        for k in range(4):
+            fr = sig[k * 256:(k + 1) * 256]
+            yield (int(mid), k, int((fr * fr).sum()))
 
-    from pmc_conversion_spark.util import ensure_parallelism
     # bounded frame (60 ids x 4 frames = 240 rows) with four plan
     # consumers — same truncation as mm_image_neardup_ahash (guide §5)
-    blocks = (ensure_parallelism(ids).mapInPandas(
-        _energies, "media_id long, frame int, energy long")
-        .withColumn("q", F.floor(F.col("energy") / 4096))
-        .localCheckpoint(eager=True))
+    blocks = (map_rows(ids, _energies,
+                       "media_id long, frame int, energy long",
+                       ("media_id", "seed"))
+              .withColumn("q", F.floor(F.col("energy") / 4096))
+              .localCheckpoint(eager=True))
     a = blocks.select(F.col("media_id").alias("ma"), "frame", "q")
     b = blocks.select(F.col("media_id").alias("mb"), "frame", "q")
     cand = (a.join(b, ["frame", "q"])
@@ -9984,8 +9930,6 @@ def mm_audio_goertzel(spark: SparkSession, sf_dir: str) -> DataFrame:
     the output). The oracle regenerates the fixture PCM by formula
     and applies the identical quantized kernel. Arrow-batched
     mapInPandas, one shuffle-free pass per clip."""
-    import pandas as pd
-
     base = (_docs(spark, sf_dir)
             .select(F.col("doc_id").alias("media_id"),
                     (F.lit(64) + F.col("doc_id") % 128).cast("int")
@@ -9994,34 +9938,24 @@ def mm_audio_goertzel(spark: SparkSession, sf_dir: str) -> DataFrame:
                     .cast("int").alias("sr")))
     encoded = MM.synth_wav_files(base)
 
-    def _goertzel(batches):
+    def _goertzel(m, content):
         import numpy as np
-        from pmc_conversion_spark.functions.multimodal import \
-            decode_wav_pcm16
-        for pdf in batches:
-            rows = []
-            for m, content in zip(pdf["media_id"], pdf["content"]):
-                sr, s = decode_wav_pcm16(bytes(content))
-                s64 = s.astype(np.float64)
-                nn = float(len(s))
-                idx = np.arange(len(s), dtype=np.float64)
-                ang = 2.0 * np.pi * 4.0 * idx / nn
-                c = np.floor(np.cos(ang) * 1048576.0 + 0.5) / 1048576.0
-                d = np.floor(np.sin(ang) * 1048576.0 + 0.5) / 1048576.0
-                cr = float((s64 * c).sum())
-                ci = float((s64 * d).sum())
-                rows.append((int(m), int(sr), len(s),
-                             round((cr * cr + ci * ci) / (nn * nn), 4),
-                             round(float(s64.sum()) / nn, 6)))
-            yield pd.DataFrame(rows, columns=[
-                "media_id", "sample_rate", "n_samples",
-                "bin4_power", "dc_mean"])
+        sr, s = MM.decode_wav_pcm16(bytes(content))
+        s64 = s.astype(np.float64)
+        nn = float(len(s))
+        idx = np.arange(len(s), dtype=np.float64)
+        ang = 2.0 * np.pi * 4.0 * idx / nn
+        c = np.floor(np.cos(ang) * 1048576.0 + 0.5) / 1048576.0
+        d = np.floor(np.sin(ang) * 1048576.0 + 0.5) / 1048576.0
+        cr = float((s64 * c).sum())
+        ci = float((s64 * d).sum())
+        yield (int(m), int(sr), len(s),
+               round((cr * cr + ci * ci) / (nn * nn), 4),
+               round(float(s64.sum()) / nn, 6))
 
-    from pmc_conversion_spark.util import ensure_parallelism
-    return ensure_parallelism(encoded).mapInPandas(
-        _goertzel,
-        "media_id bigint, sample_rate bigint, n_samples bigint, "
-        "bin4_power double, dc_mean double")
+    return map_rows(encoded, _goertzel,
+                    "media_id bigint, sample_rate bigint, n_samples bigint, "
+                    "bin4_power double, dc_mean double")
 
 
 @register(
@@ -10404,44 +10338,30 @@ def mm_audio_spectral_centroid(spark: SparkSession,
                     .cast("int").alias("sr")))
     encoded = MM.synth_wav_files(base)
 
-    def _centroid(batches):
+    def _centroid(m, content):
         import numpy as np
-        import pandas as pd
-        from pmc_conversion_spark.functions.multimodal import \
-            decode_wav_pcm16
-        for pdf in batches:
-            rows = []
-            for m, content in zip(pdf["media_id"], pdf["content"]):
-                _, s = decode_wav_pcm16(bytes(content))
-                s64 = s.astype(np.float64)
-                nn = float(len(s))
-                idx = np.arange(len(s), dtype=np.float64)
-                ps = []
-                for k in range(1, 9):
-                    ang = 2.0 * np.pi * float(k) * idx / nn
-                    c = (np.floor(np.cos(ang) * 1048576.0 + 0.5)
-                         / 1048576.0)
-                    d = (np.floor(np.sin(ang) * 1048576.0 + 0.5)
-                         / 1048576.0)
-                    cr = float((s64 * c).sum())
-                    ci = float((s64 * d).sum())
-                    ps.append((cr * cr + ci * ci) / (nn * nn))
-                num = 0.0
-                den = 0.0
-                # fixed left-to-right chains mirroring the SQL text
-                num = ((((((((1 * ps[0]) + 2 * ps[1]) + 3 * ps[2])
-                           + 4 * ps[3]) + 5 * ps[4]) + 6 * ps[5])
-                        + 7 * ps[6]) + 8 * ps[7])
-                den = ((((((ps[0] + ps[1]) + ps[2] + ps[3])
-                          + ps[4]) + ps[5]) + ps[6]) + ps[7])
-                rows.append((int(m), int(nn), num / den, den))
-            yield pd.DataFrame(rows, columns=[
-                "media_id", "n_samples", "cb", "tp"])
+        _, s = MM.decode_wav_pcm16(bytes(content))
+        s64 = s.astype(np.float64)
+        nn = float(len(s))
+        idx = np.arange(len(s), dtype=np.float64)
+        ps = []
+        for k in range(1, 9):
+            ang = 2.0 * np.pi * float(k) * idx / nn
+            c = np.floor(np.cos(ang) * 1048576.0 + 0.5) / 1048576.0
+            d = np.floor(np.sin(ang) * 1048576.0 + 0.5) / 1048576.0
+            cr = float((s64 * c).sum())
+            ci = float((s64 * d).sum())
+            ps.append((cr * cr + ci * ci) / (nn * nn))
+        # fixed left-to-right chains mirroring the SQL text
+        num = ((((((((1 * ps[0]) + 2 * ps[1]) + 3 * ps[2])
+                   + 4 * ps[3]) + 5 * ps[4]) + 6 * ps[5])
+                + 7 * ps[6]) + 8 * ps[7])
+        den = ((((((ps[0] + ps[1]) + ps[2] + ps[3])
+                  + ps[4]) + ps[5]) + ps[6]) + ps[7])
+        yield (int(m), int(nn), num / den, den)
 
-    from pmc_conversion_spark.util import ensure_parallelism
-    res = ensure_parallelism(encoded).mapInPandas(
-        _centroid, "media_id long, n_samples long, cb double, "
-                   "tp double")
+    res = map_rows(encoded, _centroid,
+                   "media_id long, n_samples long, cb double, tp double")
     return res.select("media_id", "n_samples",
                       F.round("cb", 6).alias("centroid_bin"),
                       F.round("tp", 4).alias("total_power"))

@@ -19,7 +19,6 @@ from __future__ import annotations
 
 import os
 import shutil
-import tempfile
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
@@ -580,12 +579,6 @@ def pipeline_e2e_ontology(spark: SparkSession, sf_dir: str) -> DataFrame:
 REF_STUDY_ID = "CSR_STUDY"          # luigi.cfg-sample:30
 _PATIENT_NUM = {iid: n for n, iid in enumerate(
     sorted(r[0] for r in E2E_INDIVIDUALS), 1)}
-
-
-def _csr_and_ontology(spark):
-    from pmc_conversion_spark.plans.ontology import ontology_df
-    return (RE.build_csr(spark),
-            ontology_df(spark, RE.load_ontology_nodes(), _T))
 
 
 @register(

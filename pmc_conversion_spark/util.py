@@ -62,13 +62,15 @@ def local_df(spark, rows, schema: str) -> DataFrame:
     Arrow-convertible (the case for every fixture here).
     """
     import pandas as pd
-    if isinstance(schema, str):
-        names = [c.strip().split()[0].rstrip(":")
-                 for c in schema.split(",")]
-    else:  # StructType
-        names = list(schema.fieldNames())
-    pdf = pd.DataFrame(rows, columns=names)
+    pdf = pd.DataFrame(rows, columns=_schema_names(schema))
     return spark.createDataFrame(pdf, schema)
+
+
+def _schema_names(schema) -> list[str]:
+    """Column names of a flat DDL string or a ``StructType``."""
+    if isinstance(schema, str):
+        return [c.strip().split()[0].rstrip(":") for c in schema.split(",")]
+    return list(schema.fieldNames())
 
 
 def target_partitions(df: DataFrame) -> int:
@@ -120,6 +122,29 @@ def ensure_parallelism(df: DataFrame, min_fraction: float = 0.5) -> DataFrame:
     except Exception:
         pass
     return df.repartition(target)
+
+
+def map_rows(df: DataFrame, fn, schema,
+             cols=("media_id", "content")) -> DataFrame:
+    """The one per-row Arrow Python stage: ``fn(*row[cols])`` yields
+    zero or more output tuples per input row, in ``schema`` order.
+
+    Runs as ``ensure_parallelism(df).mapInPandas``: one Python worker
+    per partition, Arrow batches in and out. The per-batch pandas
+    plumbing (column zip, output frame, column names parsed from the
+    flat ``schema``) lives here, so a caller writes only ``fn``.
+    """
+    names = _schema_names(schema)
+    cols = list(cols)
+
+    def _run(batches):
+        import pandas as pd
+        for pdf in batches:
+            rows = [out for vals in zip(*(pdf[c] for c in cols))
+                    for out in fn(*vals)]
+            yield pd.DataFrame(rows, columns=names)
+
+    return ensure_parallelism(df).mapInPandas(_run, schema)
 
 
 def checkpoint_observed(df: DataFrame, **metrics) -> tuple[DataFrame, dict]:

@@ -154,6 +154,7 @@ def test_topk_lsh_recall(vectors):
     assert len(a & b) / len(b) >= 0.5
 
 
+@pytest.mark.filterwarnings("error:Cannot infer the eval type")
 def test_blocked_cosine_matches_exact(spark):
     """The blocked-matmul scale path must reproduce the exact pair join
     on the real embeddings table."""
@@ -205,6 +206,7 @@ def test_topk_ivf_finds_true_near_neighbors(spark, fixture_df):
     assert found >= 18  # ±1-bucket multiprobe may miss a boundary case
 
 
+@pytest.mark.filterwarnings("error:Cannot infer the eval type")
 def test_knn_join_matches_bruteforce_self_query(spark):
     """The blocked kNN self-join must equal brute-force top-k with the
     corpus as its own query set (same rounding and tie contract)."""

@@ -170,6 +170,42 @@ def test_bmp_codec_roundtrip_and_geometry():
         MM.decode_bmp(b"GIF89a notabmp")
 
 
+def test_map_rows_fan_out_and_empty_input(spark, fixture_df):
+    """util.map_rows emits exactly the rows fn yields per input row
+    (0, 1 or 3 here), and an empty input keeps the declared schema."""
+    from pmc_conversion_spark.util import map_rows
+
+    def fan(k, s):
+        for i in range(k):
+            yield (int(k), i, f"{s}{i}")
+
+    schema = "k long, i int, s string"
+    df = fixture_df([(0, "a"), (1, "b"), (3, "c")], "k long, s string")
+    got = sorted(tuple(r) for r in
+                 map_rows(df, fan, schema, ("k", "s")).collect())
+    assert got == [(1, 0, "b0"), (3, 0, "c0"), (3, 1, "c1"), (3, 2, "c2")]
+
+    empty = map_rows(df.filter("k < 0"), fan, schema, ("k", "s"))
+    assert empty.schema.simpleString() == "struct<k:bigint,i:int,s:string>"
+    assert empty.collect() == []
+
+
+def test_pixel_stats_hand_computed():
+    """pixel_stats: Σv and Σ v·(r+1)·(c+1)·(ch+1) in int64; a 2-D
+    array counts as one channel."""
+    import numpy as np
+
+    from pmc_conversion_spark.functions import multimodal as MM
+
+    gray = np.array([[1, 2, 3], [4, 5, 6]], dtype=np.uint8)
+    # weighted: 1+4+9 (row 0) + 8+20+36 (row 1)
+    assert MM.pixel_stats(7, gray) == (7, 3, 2, 1, 21, 78)
+    rgb = np.arange(12, dtype=np.uint8).reshape(2, 2, 3)
+    # per pixel (r,c): (0,0) 0+2+6, (0,1) 6+16+30, (1,0) 12+28+48,
+    # (1,1) 36+80+132
+    assert MM.pixel_stats(9, rgb) == (9, 2, 2, 3, 66, 396)
+
+
 def test_ppm_codec_roundtrip_and_header_tolerance():
     """P6 codec: round-trip, comment/whitespace header tolerance,
     maxval and magic rejection."""

@@ -390,9 +390,15 @@ def test_bfs_frontier_iteration_no_cartesian(spark, qs):
     assert "CartesianProduct" not in plan
 
 
-def test_mm_decode_real_is_two_arrow_stages_no_shuffle(spark, qs):
+@pytest.mark.parametrize("name", [
+    "mm_decode_real", "mm_decode_real_gif", "mm_decode_real_gif89a",
+    "mm_decode_real_jpeg", "mm_decode_real_jpeg_color",
+    "mm_decode_real_jpeg_progressive", "mm_decode_real_png",
+    "mm_decode_real_png_adam7", "mm_decode_real_png_palette",
+    "mm_decode_real_ppm", "mm_decode_real_rle8", "mm_decode_real_wav"])
+def test_mm_decode_real_is_two_arrow_stages_no_shuffle(spark, qs, name):
     # encode + decode are both mapInPandas; no Exchange between them
-    plan = plan_of(qs["mm_decode_real"](spark, SF_DIR))
+    plan = plan_of(qs[name](spark, SF_DIR))
     assert plan.count("MapInPandas") == 2
     assert "Exchange hashpartitioning" not in plan
 
