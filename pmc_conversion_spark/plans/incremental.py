@@ -13,23 +13,27 @@ main.py:201-235):
   required_tasks (DynamicDependenciesTask.requires, luigi_commons.py:
   31-35).
 
-Fingerprints are directory-manifest digests (sorted "path sha1" lines,
-main.py:66-68) computed *distributed* via the manifest scan + digest
-operators — the driver only ever holds the 40-char digest.
+Fingerprints are directory-manifest digests: the SHA-1 of the sorted,
+newline-joined ``"<relpath> <sha1>"`` lines of the input directory
+(main.py:66-68). They are computed on the driver and launch no Spark
+job, so a pass in which nothing changed costs one file walk and one
+streamed content hash per file (64 KiB chunks, as scripts/checksum.py:
+19-32), with no mtime or size shortcut. The files listed are exactly
+those Spark's ``binaryFile`` listing feeds ``manifest_with_checksums``,
+so every fingerprint is byte-identical to ``manifest_digest`` over that
+scan and done-signals written by the Spark-side computation stay valid.
+See :func:`dir_fingerprint` for the listing rules.
 """
 
 from __future__ import annotations
 
+import hashlib
 import os
 import threading
 from collections.abc import Callable
 from dataclasses import dataclass, field
 
 from pyspark.sql import SparkSession
-from pyspark.sql import functions as F
-
-from pmc_conversion_spark.operators.aggregates import manifest_digest
-from pmc_conversion_spark.sources.scans import manifest_with_checksums
 
 #: luigi's recommended exit-code classes (luigi.cfg-sample:46-54)
 RETCODES = {
@@ -104,16 +108,55 @@ class ResourcePool:
             self._cv.notify_all()
 
 
-def dir_fingerprint(spark: SparkSession, path: str) -> str:
-    """SHA-1 of the sorted manifest digest of a directory (empty dir or
-    missing dir -> fingerprint of the empty string)."""
-    if not os.path.isdir(path) or not any(
-            not f.startswith(".") for _, _, fs in os.walk(path) for f in fs):
-        import hashlib
+def _hidden(name: str) -> bool:
+    """Spark's listing filter: hidden, underscore-prefixed (unless a
+    ``k=v`` partition name) and in-flight ``._COPYING_`` names."""
+    return (name.startswith(".") or name.endswith("._COPYING_")
+            or (name.startswith("_") and "=" not in name))
+
+
+def _file_sha1(path: str) -> str:
+    h = hashlib.sha1()
+    with open(path, "rb") as f:
+        while chunk := f.read(1 << 16):
+            h.update(chunk)
+    return h.hexdigest()
+
+
+def dir_fingerprint(path: str) -> str:
+    """SHA-1 of the sorted ``"<relpath> <sha1>"`` manifest of a
+    directory, computed on the driver (missing or empty dir -> SHA-1 of
+    the empty string; a path that is not a directory -> ValueError).
+
+    The walk keeps exactly the files that Spark's ``binaryFile`` listing
+    plus ``manifest_with_checksums`` keep, so the result is
+    byte-identical to ``sha1(manifest_digest(manifest_with_checksums(
+    spark, path)).digest)`` and signals written by that computation stay
+    valid. It skips:
+
+    - names starting with ``.``, or with ``_`` and holding no ``=``
+      (``_SUCCESS``, ``_metadata``), and names ending in ``._COPYING_``
+      — for directories too, except that Spark descends into
+      directories whose names start with ``_metadata`` or
+      ``_common_metadata``;
+    - ``.sha1`` sidecars and zero-length files.
+
+    Symlinked directories are followed, as Spark's listing does.
+    """
+    if not os.path.exists(path):
         return hashlib.sha1(b"").hexdigest()
-    digest_df = manifest_digest(manifest_with_checksums(spark, path))
-    return digest_df.select(
-        F.sha1(F.encode("digest", "UTF-8")).alias("d")).collect()[0]["d"]
+    if not os.path.isdir(path):
+        raise ValueError(f"fingerprint input is not a directory: {path}")
+    lines = []
+    for d, dirs, files in os.walk(path, followlinks=True):
+        dirs[:] = [n for n in dirs if not _hidden(n) or n.startswith(
+            ("_metadata", "_common_metadata"))]
+        for n in files:
+            f = os.path.join(d, n)
+            if _hidden(n) or n.endswith(".sha1") or os.path.getsize(f) == 0:
+                continue
+            lines.append(f"{os.path.relpath(f, path)} {_file_sha1(f)}")
+    return hashlib.sha1("\n".join(sorted(lines)).encode()).hexdigest()
 
 
 @dataclass
@@ -184,7 +227,8 @@ class DagRunner:
     however wide the scheduler runs). A task failure after its retry
     budget raises :class:`PipelineExit` carrying the classified
     retcode; the statuses gathered so far ride on ``exc.statuses`` for
-    the error report.
+    the error report. ``spark`` is the session the tasks run on; the
+    skip checks themselves launch no Spark job.
     """
 
     def __init__(self, spark: SparkSession, signals: SignalStore,
@@ -194,7 +238,7 @@ class DagRunner:
         self.resources = resources
 
     def input_signal(self, task: Task) -> str:
-        parts = [f"{d}:{dir_fingerprint(self.spark, d)}"
+        parts = [f"{d}:{dir_fingerprint(d)}"
                  for d in sorted(task.input_dirs)]
         # Upstream identity is part of the signal so a re-run upstream
         # (even yielding identical dirs listed) chains correctly.

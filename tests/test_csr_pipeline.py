@@ -6,6 +6,7 @@ the PAT2-removal incremental-rerun scenario (test_data_e2e/README:15-18).
 from __future__ import annotations
 
 import datetime
+import os
 
 import pytest
 from pyspark.sql import functions as F
@@ -114,6 +115,58 @@ def test_incremental_pat2_removal(spark, tmp_path):
     f.write_text("INDIVIDUAL_ID,SEX\nPAT1,1\nPAT3,9\n")
     assert runner.run_pipeline([t]) == [("sources2csr", "ran")]
     assert len(ran) == 2
+
+
+def test_incremental_noop_pass_launches_no_spark_job(spark, tmp_path):
+    """A no-change pass is decided on the driver: between two marker
+    jobs (Spark job ids are global and sequential) it launches none,
+    whichever thread runs the tasks. Rewriting one byte in place, at
+    the same size and mtime, still re-runs the task: the fingerprint
+    hashes content and does not stat files."""
+    from pmc_conversion_spark.plans.incremental import (
+        DagRunner, SignalStore, Task)
+    drop = tmp_path / "drop"
+    drop.mkdir()
+    f = drop / "individual.csv"
+    f.write_text("INDIVIDUAL_ID,SEX\nPAT1,1\nPAT2,2\n")
+    t = Task("sources2csr", [str(drop)], lambda: None)
+    runner = DagRunner(spark, SignalStore(str(tmp_path / "sig")))
+    assert runner.run_pipeline([t]) == [("sources2csr", "ran")]
+
+    sc = spark.sparkContext
+    sc.setJobGroup("noop-pass-marker", "job-id markers")
+    try:
+        sc.parallelize([0], 1).count()
+        assert runner.run_pipeline([t]) == [("sources2csr", "skipped")]
+        sc.parallelize([0], 1).count()
+        ids = sorted(sc.statusTracker().getJobIdsForGroup("noop-pass-marker"))
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+        sc.setLocalProperty("spark.job.description", None)
+    assert len(ids) == 2 and ids[1] == ids[0] + 1, ids
+
+    st = os.stat(f)
+    f.write_text("INDIVIDUAL_ID,SEX\nPAT1,1\nPAT2,9\n")
+    os.utime(f, ns=(st.st_atime_ns, st.st_mtime_ns))
+    assert os.stat(f).st_size == st.st_size
+    assert runner.run_pipeline([t]) == [("sources2csr", "ran")]
+
+
+def test_incremental_file_input_fails_the_task(spark, tmp_path):
+    """A task whose input is a file, not a directory, must fail
+    (task_failed) instead of fingerprinting as empty and never
+    re-running when the file changes."""
+    from pmc_conversion_spark.plans.incremental import (
+        DagRunner, PipelineExit, SignalStore, Task)
+    f = tmp_path / "individual.csv"
+    f.write_text("INDIVIDUAL_ID\nPAT1\n")
+    t = Task("sources2csr", [str(f)], lambda: None)
+    runner = DagRunner(spark, SignalStore(str(tmp_path / "sig")))
+    with pytest.raises(PipelineExit) as ei:
+        runner.run_pipeline([t])
+    assert ei.value.retclass == "task_failed"
+    assert "not a directory" in str(ei.value)
+    assert ei.value.statuses == [("sources2csr", "failed")]
 
 
 def test_config_from_json_roundtrip():

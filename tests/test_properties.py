@@ -323,7 +323,7 @@ def test_partitioning_invariance_representative_ops(spark):
     # the three r5 fold ops the hand list missed, plus one per marker
     for must in ("win_ema_crossover", "ts_holt_winters",
                  "win_ewma_irregular", "ts_kalman_1d",
-                 "mm_image_neardup_ahash", "f_jaro_winkler"):
+                 "mm_image_ahash", "f_jaro_winkler"):
         assert must in derived, f"derivation lost {must}"
     sweep = sorted(set(names) | derived)
     prev = spark.conf.get("spark.sql.shuffle.partitions")
